@@ -23,10 +23,6 @@ import time
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 BUILD = ".bench_build"
 WORKLOADS = ("pipeline_gse46602", "catalog_mix")
-# Default pipeline shape: 50 samples (36 case / 14 control) as GSE46602,
-# probes scaled down from 54,675 so that one run fits the time budget;
-# --probes 54675 gives the reference shape.
-DEFAULT_PROBES = 9000
 JVM_TIMEOUT_S = 165
 XMX = "3g"
 ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
@@ -173,7 +169,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--probes", type=int, default=DEFAULT_PROBES)
     args = ap.parse_args()
 
     load_before = loadavg()
@@ -191,7 +186,7 @@ def main():
     queries_tsv = os.path.join(BENCH_DIR, "queries.tsv")
     run_jvm(java_cmd(classpath, work, XMX) +
             [args.workload, str(args.seed), str(args.seconds), str(args.trace),
-             work, data, str(args.probes), queries_tsv], work)
+             work, data, queries_tsv], work)
     with open(os.path.join(work, "result.json")) as fh:
         res = json.load(fh)
 
@@ -217,7 +212,7 @@ def main():
     print(f"workload {args.workload} seed {args.seed} trace {args.trace}: "
           f"{res['attempted']} ops, {failed} failed (failed_frac {record['failed_frac']:.4f}), "
           f"checks {res['checks']}")
-    print(f"setup {res['setup_reps_s']} s, warm passes {res['wall_passes_s']} s")
+    print(f"warm passes {res['wall_passes_s']} s")
     for n, m in metrics.items():
         print(f"{n} = {m['value']} {m['unit']}")
     print("record " + json.dumps(record, sort_keys=True))

@@ -16,7 +16,7 @@ import graft.pipeline.{DrugTargetPipeline, PipelineConfig}
 
 /** Entry points of the harness JVM; `perfbench/run.py` builds and calls it.
   *
-  *   Main <workload> <seed> <seconds> <trace 0|1> <workDir> <dataDir> <probes> <queriesTsv>
+  *   Main <workload> <seed> <seconds> <trace 0|1> <workDir> <dataDir> <queriesTsv>
   *   Main --gen <dir> <seed> <probes>              pipeline inputs only
   *   Main --pin <queriesTsv> <dataDir> <outDir>    each query once, to parquet + engine hash
   *   Main --catalog-info <queriesTsv> <out.json>   catalog membership and oracle SQL
@@ -24,8 +24,12 @@ import graft.pipeline.{DrugTargetPipeline, PipelineConfig}
 object Main {
 
   val Pipeline = "pipeline_gse46602"
-  val SetupReps = 5
-  val PlantFrac = 0.02
+  /** Pipeline probes: GSE46602's 54,675 scaled down so that a pass fits
+    * the time budget (~3,000 genes at three probes per gene). */
+  val Probes = 9000
+  /** Share of genes with a planted shift: 450 significant genes, the
+    * paper's network size (nTopGenes caps it at 500). */
+  val PlantFrac = 0.15
   val TopNValidation = 20
   val Tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
@@ -57,9 +61,9 @@ object Main {
       Files.write(Paths.get(s"$out/engine_hashes.json"),
         body.mkString("{", ",", "}\n").getBytes("UTF-8"))
       spark.stop()
-    case Seq(workload, seed, seconds, trace, work, dataDir, probes, tsv) =>
+    case Seq(workload, seed, seconds, trace, work, dataDir, tsv) =>
       new Bench(workload, seed.toLong, seconds.toDouble, trace == "1", work, dataDir,
-        probes.toInt, tsv).run()
+        tsv).run()
     case _ =>
       System.err.println("usage: see perfbench/src/Main.scala")
       sys.exit(2)
@@ -120,17 +124,16 @@ object ResultHash {
   }
 }
 
-/** One benchmark invocation: set up (session + inputs) [[Main.SetupReps]]
-  * times and keep the median, run one cold pass, then warm passes until
-  * `seconds` have elapsed (at least one; a traced invocation alternates
-  * untraced and traced passes, at least one of each). Each pipeline pass's
-  * outputs are checked after it. Writes `result.json` and `spans.jsonl` in
-  * `work`.
-  * JVM start to `main` is recorded apart, as `jvm_to_main_s`: it varies
-  * with host load far more than with the code.
+/** One benchmark invocation: set up once (session + inputs), run one cold
+  * pass, then warm passes until `seconds` have elapsed, at least one. A
+  * traced invocation runs its warm passes in triples until `seconds` have
+  * elapsed, at least one: untraced, traced, untraced, or traced,
+  * untraced, traced, as the seed picks. Each pipeline pass's outputs are
+  * checked after it. Writes `result.json` and `spans.jsonl` in `work`.
+  * `setup_s` is JVM start to the end of set-up.
   */
 final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
-                  work: String, dataDir: String, probes: Int, queriesTsv: String) {
+                  work: String, dataDir: String, queriesTsv: String) {
   import Main._
 
   /** One operation: one pipeline run or one catalog query execution. Its
@@ -170,7 +173,7 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
     * and their parquet schemas. */
   private def setUp(): Unit = {
     spark = session(cores, work)
-    if (isPipeline) planted = PipelineInputs.write(inputDir, seed, probes, PlantFrac)
+    if (isPipeline) planted = PipelineInputs.write(inputDir, seed, Probes, PlantFrac)
     else Tables.foreach { t =>
       require(Files.exists(Paths.get(s"$dataDir/$t.parquet")), s"missing table $t in $dataDir")
       spark.read.parquet(s"$dataDir/$t.parquet").schema
@@ -312,52 +315,54 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
       s"$nFinal rows, differing outputs ${digests.filterNot(ref.toSet).keys.mkString(",")}")
   }
 
-  def run(): Unit = {
+  /** Seconds from JVM start to the end of set-up. Set-up is timed once,
+    * in this fresh JVM: a second set-up in the same JVM would skip class
+    * loading and static initialisation, which every user pays. */
+  private def timedSetUp(): Double = {
     val jvmStartMs = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     val jvmToMain = (System.currentTimeMillis() - jvmStartMs) / 1000.0
-    val setupTimes = (1 to SetupReps).map { i =>
-      val t0 = System.nanoTime()
-      setUp()
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (i < SetupReps) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      dt
-    }
+    val t0 = System.nanoTime()
+    setUp()
+    jvmToMain + (System.nanoTime() - t0) / 1e9
+  }
+
+  def run(): Unit = {
+    val setupS = timedSetUp()
     val listener = new LayerListener
     spark.sparkContext.addSparkListener(listener)
     val tracer = new Tracer(spark.sparkContext)
 
-    def pass(id: Int, traced: Boolean): PassStats = {
+    var id = 0
+    def pass(traced: Boolean): PassStats = {
       val failedBefore = failed
       val p = runPass(id, traced, tracer, listener)
       if (isPipeline && failed == failedBefore)
         checkPipelinePass(id, if (traced) outTraced else outPlain)
+      id += 1
       p
     }
-    val cold = pass(0, trace)
+    val cold = pass(trace)
     val warm = ArrayBuffer.empty[PassStats]
+    val triples = ArrayBuffer.empty[Seq[PassStats]]
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    def enough(traced: Boolean) = warm.exists(_.traced == traced)
-    var id = 1
-    while (System.nanoTime() < deadline || !enough(false) || (trace && !enough(true))) {
-      // a traced invocation alternates untraced and traced passes, so the
-      // overhead compares passes taken under the same host conditions
-      warm += pass(id, trace && id % 2 == 0)
-      id += 1
+    if (!trace) do warm += pass(traced = false) while (System.nanoTime() < deadline)
+    else {
+      // Warm passes still speed up pass after pass. The outer two passes of
+      // a triple average to the time of the middle one as far as a steady
+      // speed-up goes, so their difference is the cost of tracing, not of
+      // order.
+      val outerTraced = Math.floorMod(seed, 2L) == 1L
+      do triples += Seq(outerTraced, !outerTraced, outerTraced).map(pass)
+      while (System.nanoTime() < deadline)
     }
     Files.write(Paths.get(s"$work/spans.jsonl"),
       tracer.toJsonLines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    writeResult(jvmToMain, setupTimes, cold, warm.toSeq)
+    writeResult(setupS, cold, warm.toSeq, triples.toSeq)
     spark.stop()
   }
 
-  private def writeResult(jvmToMain: Double, setupTimes: Seq[Double], cold: PassStats,
-                          warm: Seq[PassStats]): Unit = {
-    val plain = warm.filterNot(_.traced)
-    val traced = warm.filter(_.traced)
+  private def writeResult(setupS: Double, cold: PassStats, plain: Seq[PassStats],
+                          triples: Seq[Seq[PassStats]]): Unit = {
     val walls = plain.map(_.wallNs / 1e9)
     val fields = ArrayBuffer.empty[(String, String)]
     def kv(k: String, v: String): Unit = fields += k -> v
@@ -370,11 +375,9 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
     kv("spark_version", jstr(spark.version))
     kv("scala_version", jstr(scala.util.Properties.versionNumberString))
     kv("java_version", jstr(System.getProperty("java.version")))
-    kv("probes", if (isPipeline) probes.toString else "null")
+    kv("probes", if (isPipeline) Probes.toString else "null")
     kv("queries", arr(querySet.map(q => jstr(q._1))))
-    kv("jvm_to_main_s", num(jvmToMain))
-    kv("setup_reps_s", arr(setupTimes.map(num)))
-    kv("setup_s", num(median(setupTimes)))
+    kv("setup_s", num(setupS))
     kv("cold_s", num(cold.wallNs / 1e9))
     kv("wall_s", num(median(walls)))
     kv("wall_passes_s", arr(walls.map(num)))
@@ -386,14 +389,18 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
     kv("failures", arr(failures.toSeq.map(jstr)))
     kv("checks", checks.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}"))
     kv("observed", arr(observed.toSeq))
-    if (trace) kv("layers", layerMetrics(cold, traced, median(walls)))
+    if (trace) kv("layers", layerMetrics(cold, triples))
     Files.write(Paths.get(s"$work/result.json"),
       fields.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}\n").getBytes("UTF-8"))
   }
 
-  /** Per-layer metrics: medians over the traced warm passes (kernel.cold_*
-    * from the cold pass, which a traced invocation also traces). */
-  private def layerMetrics(cold: PassStats, traced: Seq[PassStats], untracedWall: Double): String = {
+  /** Per-layer metrics: medians over the traced warm passes
+    * (kernel.cold_* from the cold pass, which a traced invocation also
+    * traces). The overhead is the mean over the triples of the traced
+    * minus the untraced time, each side averaged within its triple. */
+  private def layerMetrics(cold: PassStats, triples: Seq[Seq[PassStats]]): String = {
+    val traced = triples.flatten.filter(_.traced)
+    def meanWall(ps: Seq[PassStats]) = ps.map(_.wallNs / 1e9).sum / ps.size
     val m = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def med(f: PassStats => Double) = median(traced.map(f))
     def cnt(p: PassStats, l: String) = p.layers.getOrElse(l, new Counters)
@@ -418,7 +425,8 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
     m("kernel.cold_codegen_s") = cold.codegenNs / 1e9
     m("report.bytes_written") = med(_.bytesWritten.toDouble)
     m("trace.wall_s") = med(_.wallNs / 1e9)
-    m("trace.overhead_s") = m("trace.wall_s") - untracedWall
+    m("trace.overhead_s") = triples.map { t =>
+      meanWall(t.filter(_.traced)) - meanWall(t.filterNot(_.traced)) }.sum / triples.size
     m.map { case (k, v) => jstr(k) + ":" + num(v) }.mkString("{", ",", "}")
   }
 }
@@ -427,7 +435,7 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
 object Layers {
   val all: Seq[String] = Seq("geo", "prep", "mapping", "de", "net", "graph", "enrich",
     "report", "ml", "dedup", "text", "sketch", "web", "spark")
-  /** layers a catalog query can be tagged with; these also get plan_s/exec_s */
-  val catalog: Set[String] = Set("graph", "ml", "de", "prep", "dedup", "text", "sketch",
-    "web", "spark")
+  /** layers the catalog queries in queries.tsv are tagged with; these also
+    * get plan_s/exec_s */
+  val catalog: Set[String] = Set("ml", "dedup", "text", "sketch", "web", "spark")
 }

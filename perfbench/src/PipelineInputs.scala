@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   * OpenTargets JSONL snapshot, both with misses.
   *
   * Every value derives from an integer LCG keyed by (seed, position), so
-  * the same seed writes byte-identical files. A planted fraction of genes
+  * the same seed writes byte-identical files. A planted share of genes
   * carries a case-only shift on every one of its probes: half up, half
   * down. Non-planted probes get noise that is centred within each group,
   * so their case and control means are equal and the significant set the
@@ -22,6 +22,11 @@ import java.nio.file.{Files, Paths}
   * bridge genes average two neighbouring modules' profiles and link them.
   * The co-expression network is then a ring of dense modules, not one
   * clique, and betweenness has something to rank.
+  *
+  * The seed picks which genes are planted, but not how many, nor the size
+  * of each module or the number of bridges: those set the network's size,
+  * and with it the work of the `net` and `graph` layers, which should not
+  * change from seed to seed.
   */
 object PipelineInputs {
 
@@ -29,7 +34,8 @@ object PipelineInputs {
   val NControl = 14
   val Shift = 2.5
   val Modules = 6
-  val BridgeFrac = 0.15
+  /** one planted gene in this many is a bridge */
+  val BridgeEvery = 7
 
   final case class Files4(matrix: String, mapping: String, ensembl: String,
                           openTargets: String)
@@ -56,17 +62,29 @@ object PipelineInputs {
 
   def isMapped(seed: Long, probe: Int): Boolean = u(seed, 1, probe) < 0.8
 
-  /** +1 planted up, -1 planted down, 0 not planted */
-  def plantSign(seed: Long, gene: Int, frac: Double): Int = {
-    val x = u(seed, 2, gene)
-    if (x >= frac) 0 else if (x < frac / 2) 1 else -1
-  }
+  /** The planted genes: the first `round(plantFrac * nGenes)` mapped genes
+    * in an order the seed shuffles. The k-th goes up when k is even and
+    * down when it is odd, joins module `(k / 2) % Modules`, and is a bridge
+    * when `k % BridgeEvery == 0`. */
+  private final class Plan(seed: Long, mappedGene: Array[Boolean], plantFrac: Double) {
+    /** +1 planted up, -1 planted down, 0 not planted */
+    val sign = new Array[Int](mappedGene.length)
+    val module = new Array[Int](mappedGene.length)
+    val bridge = new Array[Boolean](mappedGene.length)
+    mappedGene.indices.filter(mappedGene).sortBy(g => u(seed, 2, g))
+      .take(math.round(plantFrac * mappedGene.length).toInt)
+      .zipWithIndex.foreach { case (g, k) =>
+        sign(g) = if (k % 2 == 0) 1 else -1
+        module(g) = (k / 2) % Modules
+        bridge(g) = k % BridgeEvery == 0
+      }
 
-  /** Case-sample shift profile of a planted gene, in [-1, 1]. */
-  private def profile(seed: Long, gene: Int, caseSample: Int): Double = {
-    def w(m: Int) = 2 * u(seed, 11, m.toLong * NCase + caseSample) - 1
-    val m = (u(seed, 10, gene) * Modules).toInt
-    if (u(seed, 12, gene) < BridgeFrac) (w(m) + w((m + 1) % Modules)) / 2 else w(m)
+    /** Case-sample shift profile of a planted gene, in [-1, 1]. */
+    def profile(gene: Int, caseSample: Int): Double = {
+      def w(m: Int) = 2 * u(seed, 11, m.toLong * NCase + caseSample) - 1
+      val m = module(gene)
+      if (bridge(gene)) (w(m) + w((m + 1) % Modules)) / 2 else w(m)
+    }
   }
 
   def paths(dir: String): Files4 =
@@ -74,9 +92,8 @@ object PipelineInputs {
       s"$dir/ensembl.csv", s"$dir/opentargets.jsonl")
 
   /** Writes the four inputs under `dir`, plus `planted.tsv` (symbol, up or
-    * down), and returns the planted genes that the mapping can see: a
-    * planted gene with no mapped probe cannot be recovered, so it is not
-    * in the expected set. */
+    * down), and returns the planted genes. Only genes with a mapped probe
+    * are planted, so the pipeline can recover every one of them. */
   def write(dir: String, seed: Long, nProbes: Int, plantFrac: Double): Planted = {
     Files.createDirectories(Paths.get(dir))
     val f = paths(dir)
@@ -88,6 +105,7 @@ object PipelineInputs {
       if (isMapped(seed, p)) mappedGene(geneOf(p)) = true
       p += 1
     }
+    val plan = new Plan(seed, mappedGene, plantFrac)
 
     val ids = (1 to n).map(i => f"GSM$i%05d")
     val w = new BufferedWriter(new FileWriter(f.matrix), 1 << 20)
@@ -104,7 +122,7 @@ object PipelineInputs {
     p = 0
     while (p < nProbes) {
       val base = 6.0 + 4.0 * u(seed, 3, p)
-      val sign = plantSign(seed, geneOf(p), plantFrac)
+      val sign = plan.sign(geneOf(p))
       var s = 0
       while (s < n) { noise(s) = (u(seed, 4, p.toLong * n + s) - 0.5) * 0.8; s += 1 }
       centre(noise, 0, NCase)
@@ -115,7 +133,7 @@ object PipelineInputs {
       while (s < n) {
         val shift =
           if (sign == 0 || s >= NCase) 0.0
-          else sign * Shift * (1 + profile(seed, geneOf(p), s))
+          else sign * Shift * (1 + plan.profile(geneOf(p), s))
         val v = base + noise(s) + shift
         sb.append('\t').append(math.rint(v * 10000) / 10000.0)
         s += 1
@@ -165,8 +183,7 @@ object PipelineInputs {
     ew.close()
     ow.close()
 
-    val planted = (0 until nGenes).filter(mappedGene)
-      .map(g => symbol(g) -> plantSign(seed, g, plantFrac)).filter(_._2 != 0)
+    val planted = (0 until nGenes).map(g => symbol(g) -> plan.sign(g)).filter(_._2 != 0)
     Files.write(Paths.get(s"$dir/planted.tsv"), planted
       .map { case (s, d) => s"$s\t${if (d > 0) "up" else "down"}\n" }.mkString
       .getBytes("UTF-8"))

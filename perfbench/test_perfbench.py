@@ -21,8 +21,9 @@ import run  # noqa: E402
 
 NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
 UNIT = re.compile(r"^[A-Za-z0-9_/%.-]{1,16}$")
-# layers a catalog query may be tagged with (Layers.catalog in src/Main.scala)
-CATALOG_LAYERS = {"graph", "ml", "de", "prep", "dedup", "text", "sketch", "web", "spark"}
+# layers the catalog queries are tagged with (Layers.catalog in src/Main.scala),
+# each with plan_s/exec_s metrics
+CATALOG_LAYERS = {"ml", "dedup", "text", "sketch", "web", "spark"}
 
 
 def load_spec():
@@ -61,6 +62,12 @@ class SpecTest(unittest.TestCase):
             self.assertIn(row[2], CATALOG_LAYERS)
         queries = [r[1] for r in rows]
         self.assertEqual(len(queries), len(set(queries)), "a query is listed once")
+        self.assertEqual({r[2] for r in rows}, CATALOG_LAYERS, "every catalog layer is tagged")
+
+    def test_plan_and_exec_metrics_only_for_catalog_layers(self):
+        split = {m["name"].split(".")[0] for m in load_spec()["per_layer"]
+                 if m["name"].endswith((".plan_s", ".exec_s"))}
+        self.assertEqual(split, CATALOG_LAYERS)
 
     def test_every_query_has_a_pinned_result(self):
         with open(os.path.join(run.BENCH_DIR, "expected_digests.json")) as fh:
