@@ -213,6 +213,9 @@ def main():
           f"{res['attempted']} ops, {failed} failed (failed_frac {record['failed_frac']:.4f}), "
           f"checks {res['checks']}")
     print(f"warm passes {res['wall_passes_s']} s")
+    if res["byte_differing_outputs"]:
+        print("outputs not byte-identical to the first pass's (passes): "
+              + json.dumps(res["byte_differing_outputs"], sort_keys=True))
     for n, m in metrics.items():
         print(f"{n} = {m['value']} {m['unit']}")
     print("record " + json.dumps(record, sort_keys=True))

@@ -1,7 +1,6 @@
 package perfbench
 
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -20,6 +19,7 @@ import graft.pipeline.{DrugTargetPipeline, PipelineConfig}
   *   Main --gen <dir> <seed> <probes>              pipeline inputs only
   *   Main --pin <queriesTsv> <dataDir> <outDir>    each query once, to parquet + engine hash
   *   Main --catalog-info <queriesTsv> <out.json>   catalog membership and oracle SQL
+  *   Main --compare <outDirA> <outDirB>            OutputCheck; exit 1 if they disagree
   */
 object Main {
 
@@ -49,6 +49,10 @@ object Main {
           s"\"oracle_sql\":${SparkEntry.oracleSql.get(q).map(jstr).getOrElse("null")}}"
       }
       Files.write(Paths.get(out), body.mkString("{", ",", "}\n").getBytes("UTF-8"))
+    case Seq("--compare", a, b) =>
+      val (_, problems) = OutputCheck.compare(OutputCheck.read(a), OutputCheck.read(b))
+      problems.foreach(println)
+      sys.exit(if (problems.isEmpty) 0 else 1)
     case Seq("--pin", tsv, dataDir, out) =>
       val spark = session(Runtime.getRuntime.availableProcessors, out)
       val body = readQueries(tsv).map { case (_, q, _) =>
@@ -84,6 +88,16 @@ object Main {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Every regular file under `dir`; none if it does not exist. */
+  def walk(dir: String): Seq[java.nio.file.Path] = {
+    val p = Paths.get(dir)
+    if (!Files.exists(p)) Nil
+    else {
+      val s = Files.walk(p)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
+    }
   }
 
   def median(xs: Seq[Double]): Double = {
@@ -157,7 +171,10 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
   private val outPlain = s"$work/out/plain"
   private val outTraced = s"$work/out/traced"
   private var planted: PipelineInputs.Planted = _
-  private var firstOutputs: Option[Map[String, String]] = None
+  private var firstOutputs: Option[Map[String, Array[Byte]]] = None
+  /** output file -> passes in which it was not byte-identical to the first
+    * pass's (recorded, not checked: see OutputCheck) */
+  private val byteDiffs = scala.collection.mutable.TreeMap.empty[String, Int]
   /** pipeline check name -> passed on every pass checked */
   private val checks = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
 
@@ -212,15 +229,6 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
         })
     }
 
-  private def walk(dir: String): Seq[java.nio.file.Path] = {
-    val p = Paths.get(dir)
-    if (!Files.exists(p)) Nil
-    else {
-      val s = Files.walk(p)
-      try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
-    }
-  }
-
   private def runPass(id: Int, traced: Boolean, tracer: Tracer,
                       listener: LayerListener): PassStats = {
     tracer.pass = id
@@ -270,23 +278,6 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
     failures += msg
   }
 
-  /** sha-256 of every output file under `dir`, keyed by its path with the
-    * part file's random name dropped (sink part files hashed in name order). */
-  private def outputDigests(dir: String): Map[String, String] = {
-    val root = Paths.get(dir)
-    walk(dir).filterNot { p =>
-      val n = p.getFileName.toString
-      n.startsWith(".") || n == "_SUCCESS"
-    }.groupBy { p =>
-      if (p.getFileName.toString.startsWith("part-")) root.relativize(p.getParent).toString
-      else root.relativize(p).toString
-    }.map { case (k, ps) =>
-      val md = MessageDigest.getInstance("SHA-256")
-      ps.sortBy(_.toString).foreach(p => md.update(Files.readAllBytes(p)))
-      k -> md.digest().map("%02x".format(_)).mkString
-    }
-  }
-
   private def csvRows(sinkDir: String): Seq[Array[String]] =
     walk(sinkDir).filter(_.getFileName.toString.matches("part-.*\\.csv"))
       .sortBy(_.toString).flatMap(p => Files.readAllLines(p).asScala.drop(1))
@@ -294,25 +285,27 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
 
   /** Checks the outputs one pipeline pass wrote: the significant set equals
     * the planted set with the same up/down split, final_targets has
-    * topNValidation rows, and every file equals, byte for byte, what the
-    * first pass wrote (so traced passes must write what untraced ones do).
-    * A failed check fails that pass's run. */
+    * topNValidation rows, and every file agrees with what the first pass
+    * wrote, as `OutputCheck` defines (so traced passes must write what
+    * untraced ones do). A failed check fails that pass's run. */
   private def checkPipelinePass(id: Int, dir: String): Unit = {
     val sig = csvRows(s"$dir/data/significant_genes")
     val up = sig.filter(_(1).toDouble > 0).map(_(0)).toSet
     val down = sig.filter(_(1).toDouble < 0).map(_(0)).toSet
     val nFinal = csvRows(s"$dir/data/final_targets").size
-    val digests = outputDigests(dir)
-    val ref = firstOutputs.getOrElse { firstOutputs = Some(digests); digests }
+    val outputs = OutputCheck.read(dir)
+    val ref = firstOutputs.getOrElse { firstOutputs = Some(outputs); outputs }
+    val (differing, problems) = OutputCheck.compare(ref, outputs)
+    differing.foreach(k => byteDiffs(k) = byteDiffs.getOrElse(k, 0) + 1)
     val results = Seq(
       "significant_equals_planted" -> (up == planted.up && down == planted.down),
       "final_targets_rows" -> (nFinal == TopNValidation),
-      "outputs_equal_first_pass" -> (digests == ref))
+      "outputs_match_first_pass" -> problems.isEmpty)
     results.foreach { case (k, ok) => checks(k) = checks.getOrElse(k, true) && ok }
     val bad = results.collect { case (k, false) => k }
     if (bad.nonEmpty) fail(s"pass $id checks ${bad.mkString(",")}: significant up " +
       s"${up.size}/${planted.up.size} down ${down.size}/${planted.down.size}, final_targets " +
-      s"$nFinal rows, differing outputs ${digests.filterNot(ref.toSet).keys.mkString(",")}")
+      s"$nFinal rows, ${problems.mkString("; ")}")
   }
 
   /** Seconds from JVM start to the end of set-up. Set-up is timed once,
@@ -388,6 +381,8 @@ final class Bench(workload: String, seed: Long, seconds: Double, trace: Boolean,
     kv("failed", failed.toString)
     kv("failures", arr(failures.toSeq.map(jstr)))
     kv("checks", checks.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}"))
+    kv("byte_differing_outputs",
+      byteDiffs.map { case (k, n) => jstr(k) + ":" + n }.mkString("{", ",", "}"))
     kv("observed", arr(observed.toSeq))
     if (trace) kv("layers", layerMetrics(cold, triples))
     Files.write(Paths.get(s"$work/result.json"),

@@ -21,8 +21,8 @@ import graft.report.{Figures, Sinks}
   * that would otherwise pull it lazily. Any stage failure throws: the
   * benchmark counts the whole run as failed.
   *
-  * The CSV, GEXF and summary outputs must equal the untraced run's byte
-  * for byte; the benchmark checks that.
+  * Its outputs must agree with the untraced run's as `OutputCheck`
+  * defines; the benchmark checks that.
   */
 final class TracedPipeline(spark: SparkSession, config: PipelineConfig, t: Tracer) {
 

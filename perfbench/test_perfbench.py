@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Tests of the benchmark itself: its spec, its query table and its input
-generator.
+"""Tests of the benchmark itself: its spec, its query table, its input
+generator and its pipeline output check.
 
     python3 perfbench/test_perfbench.py
 
@@ -111,6 +111,60 @@ class HarnessTest(unittest.TestCase):
         with open(os.path.join(dirs["a"], "planted.tsv")) as fh:
             kinds = {line.split("\t")[1].strip() for line in fh}
         self.assertEqual(kinds, {"up", "down"})
+
+    def outputs(self, name, **tables):
+        """A pipeline output tree: BASE_OUTPUTS with some files replaced."""
+        root = os.path.join(self.work, "out_" + name)
+        shutil.rmtree(root, ignore_errors=True)
+        for key, body in dict(BASE_OUTPUTS, **tables).items():
+            sink = key.startswith("data/")
+            path = os.path.join(root, key, "part-00000.csv") if sink else os.path.join(root, key)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "w") as fh:
+                fh.write(body)
+        return root
+
+    def agrees(self, name, **tables):
+        base = self.outputs("base")
+        cmd = run.java_cmd(self.classpath, self.work, "1g") + [
+            "--compare", base, self.outputs(name, **tables)]
+        return subprocess.run(cmd, stdout=subprocess.DEVNULL,
+                              stderr=subprocess.DEVNULL).returncode == 0
+
+    def test_output_check_allows_only_summation_order_noise(self):
+        tiny = "0.5000000000000001"  # one ulp above 0.5
+        # last-digit noise in a score, and the order and top-k choice of
+        # tied genes, are accepted
+        self.assertTrue(self.agrees("same"))
+        self.assertTrue(self.agrees("ulp", **{
+            "data/network_targets": NETWORK.replace("C,0.5,0.5", f"C,{tiny},{tiny}")}))
+        self.assertTrue(self.agrees("tie_swap", **{
+            "data/top_targets_barplot": "gene,composite_score\nA,1.0\nC," + tiny + "\n",
+            "figures/top_targets.png": "other pixels"}))
+        # anything else is not
+        self.assertFalse(self.agrees("value", **{
+            "data/network_targets": NETWORK.replace("B,0.5,0.5", "B,0.500001,0.5")}))
+        self.assertFalse(self.agrees("not_tied", **{
+            "data/top_targets_barplot": "gene,composite_score\nA,1.0\nD,0.2\n"}))
+        self.assertFalse(self.agrees("swap_above_cut", **{
+            "data/top_targets_barplot": "gene,composite_score\nE,1.0\nB,0.5\n"}))
+        self.assertFalse(self.agrees("missing_gene", **{
+            "data/network_targets": NETWORK.replace("D,0.2,0.2\n", "")}))
+        self.assertFalse(self.agrees("other_file", **{
+            "data/significant_genes": "gene,log2FC\nA,1.0000000000000002\n"}))
+        self.assertFalse(self.agrees("figure_alone", **{"figures/top_targets.png": "other"}))
+
+
+# A miniature pipeline output tree: B and C tie, and the top-2 barplot cuts
+# between them.
+NETWORK = ("gene,betweenness_centrality,composite_score\n"
+           "A,1.0,1.0\nB,0.5,0.5\nC,0.5,0.5\nD,0.2,0.2\n")
+BASE_OUTPUTS = {
+    "data/significant_genes": "gene,log2FC\nA,1.0\n",
+    "data/network_targets": NETWORK,
+    "data/top_targets_barplot": "gene,composite_score\nA,1.0\nB,0.5\n",
+    "figures/top_targets.png": "pixels",
+}
 
 
 if __name__ == "__main__":
