@@ -57,7 +57,8 @@ object Centrality {
   /** G3: exact betweenness centrality, Brandes' algorithm, unweighted,
     * normalized — matches `nx.betweenness_centrality(G)` defaults. The
     * per-source BFS passes run distributed: sources are parallelized,
-    * adjacency broadcast, partial dependency vectors summed.
+    * adjacency broadcast, partial dependency vectors collected and summed
+    * in partition order (deterministic to the last bit).
     *
     * `sampleSources = Some(k)` switches to the Brandes–Pich estimator:
     * k evenly-spread source vertices, dependencies scaled by n/k — the
@@ -139,7 +140,12 @@ object Centrality {
         }
         Iterator.single(acc)
       }
-      .treeReduce { (x, y) =>
+      // collect returns the partials in partition order; summing them in
+      // that order (not task-completion order, as a reduce would) makes
+      // the scores bit-identical from run to run, so exactly tied genes
+      // keep their gene-name order downstream. <= 256 arrays of n doubles.
+      .collect()
+      .reduce { (x, y) =>
         var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x
       }
 

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -25,6 +27,10 @@ final case class PipelineConfig(
     corrThreshold: Double = 0.7,
     topNValidation: Int = 20)
 
+/** A collected frame: its rows, and the local relation rebuilt from
+  * them. */
+private final case class Collected(rows: Seq[Row], df: DataFrame)
+
 final case class PipelineResult(
     differential: Option[DataFrame],
     significant: Option[DataFrame],
@@ -37,9 +43,22 @@ final case class PipelineResult(
   * materialized at each sink, with the reference's per-stage error isolation:
   * parse failure aborts, anything later degrades and the run continues.
   *
-  * The normalized gene-level frame is persisted (MEMORY_AND_DISK): it feeds
-  * differential analysis AND network construction — the two heaviest
-  * consumers — so the scan/shuffle pipeline up to it runs once.
+  * What is persisted (MEMORY_AND_DISK): the parsed long-form expression,
+  * the normalized gene-level frame and the differential results. The gene
+  * frame feeds differential analysis AND network construction, the two
+  * heaviest consumers, so the scan/shuffle pipeline up to it runs once.
+  * Network construction persists the top genes, their correlations and the
+  * edges, which its own sinks read.
+  *
+  * What becomes a local relation: from network construction on, every table
+  * is bounded by `nTopGenes` (the edge list by its square). The node list,
+  * the edge list and the composite scores are each collected once and
+  * rebuilt with their schema as local relations; centrality, the figure
+  * data, validation and the summary read those. Why: persisting keeps a
+  * frame's lineage, so every job over it, even a 30-row `limit` answered
+  * from the cache, plans and schedules against the whole pipeline's plan.
+  * Here lineage depth, not rows, sets the per-job cost; a job over a local
+  * relation plans a handful of operators.
   */
 final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
 
@@ -57,6 +76,13 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       }
     timings += name -> (System.nanoTime() - t0) / 1e9
     out
+  }
+
+  /** Collects `df` (callers pass only frames bounded by nTopGenes) and
+    * rebuilds it as a local relation with the same schema. */
+  private def collectLocal(df: DataFrame): Collected = {
+    val rows = df.collect().toSeq
+    Collected(rows, spark.createDataFrame(rows.asJava, df.schema))
   }
 
   def run(): PipelineResult = {
@@ -128,7 +154,8 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
           .persist(StorageLevel.MEMORY_AND_DISK)
         val edges = CoExpressionNetwork.edges(corrs, config.corrThreshold)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val topSeq = top.collect().map(_.getString(0)).toSeq
+        val nodes = collectLocal(top)
+        val topSeq = nodes.rows.map(_.getString(0))
         Sinks.writeCsv(
           Sinks.pivotWide(
             corrs.select(col("g1"), col("g2"), col("corr"))
@@ -137,53 +164,50 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
                 lit(1.0).as("corr"))),
             "g1", "g2", "corr", topSeq),
           s"$out/data/correlation_matrix")
-        val edgeSeq = edges.collect()
-          .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
-        Sinks.writeGexf(topSeq, edgeSeq, s"$out/data/gene_network.gexf")
-        (top, edges)
+        val edgeList = collectLocal(edges)
+        Sinks.writeGexf(topSeq, edgeList.rows
+          .map(r => (r.getString(0), r.getString(1), r.getDouble(2))),
+          s"$out/data/gene_network.gexf")
+        (nodes, edgeList)
       }
     }
 
     // Stage 6: centrality analysis (G7 guards: < 2 nodes -> zero frame)
-    val targetScores = network.flatMap { case (top, edges) =>
+    val scores = network.flatMap { case (nodes, edges) =>
       stage("analyze_network") {
-        val nNodes = top.count()
-        val scores =
-          if (nNodes < 2) {
+        val names = nodes.rows.map(_.getString(0))
+        val composite =
+          if (names.size < 2) {
             import spark.implicits._
-            val names =
-              if (nNodes == 0) Seq("PLACEHOLDER")
-              else top.collect().map(_.getString(0)).toSeq
-            names.map((_, 0.0, 0.0, 0.0, 0.0))
+            (if (names.isEmpty) Seq("PLACEHOLDER") else names)
+              .map((_, 0.0, 0.0, 0.0, 0.0))
               .toDF("gene", "degree_centrality", "betweenness_centrality",
                 "eigenvector_centrality", "composite_score")
           } else {
-            val nodes = top.select("gene")
-            val deg = Centrality.degreeCentrality(nodes, edges)
-            val btw = Centrality.betweennessCentrality(spark, nodes, edges)
-            val eig = Centrality.eigenvectorCentrality(spark, nodes, edges)
+            val deg = Centrality.degreeCentrality(nodes.df, edges.df)
+            val btw = Centrality.betweennessCentrality(spark, nodes.df, edges.df)
+            val eig = Centrality.eigenvectorCentrality(spark, nodes.df, edges.df)
             Centrality.compositeScores(
               deg.join(btw, Seq("gene")).join(eig, Seq("gene")))
           }
-        // persist BEFORE the sink write: the write materializes the cache,
-        // so the figure-data and summary stages reuse the centralities
-        // instead of recomputing Brandes + power iteration
-        val persisted = scores.persist(StorageLevel.MEMORY_AND_DISK)
-        Sinks.writeCsv(persisted, s"$out/data/network_targets")
-        persisted
+        val collected = collectLocal(composite)
+        Sinks.writeCsv(collected.df, s"$out/data/network_targets")
+        collected
       }
     }
+    val targetScores = scores.map(_.df)
 
     // Stage 6b: figure-data sinks (S10 network viz + barplot tables;
     // G5 subgraph + F10 placeholder filter live inside the builders)
     (network, targetScores) match {
       case (Some((_, edges)), Some(ts)) =>
-        // plan construction sits inside a stage too: an AnalysisException
-        // from schema drift must degrade this stage, not abort the run
-        // one construction serves both sinks; the lazy holder keeps plan
-        // construction inside the first stage that forces it, so an
-        // AnalysisException still degrades a stage rather than the run
-        lazy val vizData = Sinks.networkVizData(ts, edges)
+        // one construction serves the CSV and the PNG stages; the lazy
+        // holders keep plan construction inside the first stage that
+        // forces it, so an AnalysisException from schema drift degrades
+        // a stage rather than aborting the run
+        lazy val vizData = Sinks.networkVizData(ts, edges.df)
+        lazy val barplot = Sinks.barplotData(ts)
+          .orderBy(col("composite_score").desc, col("gene"))
         stage("figure_viz_nodes") {
           Sinks.writeCsv(vizData._1.orderBy(col("node_size").desc, col("gene")),
             s"$out/data/network_viz_nodes")
@@ -193,9 +217,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
             s"$out/data/network_viz_edges")
         }
         stage("figure_barplot") {
-          Sinks.writeCsv(
-            Sinks.barplotData(ts).orderBy(col("composite_score").desc, col("gene")),
-            s"$out/data/top_targets_barplot")
+          Sinks.writeCsv(barplot, s"$out/data/top_targets_barplot")
         }
         // PNG rendering (G6 + S10 at pixel grain, pipeline2.py:1059-1114):
         // spring-layout network for >= 2 real nodes, bar plot when any
@@ -213,8 +235,7 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
           }
         }
         stage("figure_barplot_png") {
-          val tops = Sinks.barplotData(ts)
-            .orderBy(col("composite_score").desc, col("gene")).collect()
+          val tops = barplot.collect()
             .map(r => (r.getString(0), r.getDouble(1))).toSeq
           if (tops.nonEmpty)
             Figures.renderBarplot(tops, s"$out/figures/top_targets.png")
@@ -246,15 +267,16 @@ final class DrugTargetPipeline(spark: SparkSession, config: PipelineConfig) {
       val nControl = meta.filter(col("condition") === "control").count()
       val nProbes = geo.expression.select("probe_id").distinct().count()
       val nGenes = genes.map(_.select("gene").distinct().count()).getOrElse(0L)
-      val nSig = significant.map(_.count()).getOrElse(0L)
-      val nUp = significant.map(_.filter(col("log2FC") > 0).count()).getOrElse(0L)
-      val nDown = significant.map(_.filter(col("log2FC") < 0).count()).getOrElse(0L)
-      val nNodes = network.map(_._1.count()).getOrElse(0L)
-      val nEdges = network.map(_._2.count()).getOrElse(0L)
-      val topTargets = targetScores.map(
-        _.orderBy(col("composite_score").desc, col("gene")).limit(10)
-          .collect().map(r => (r.getString(0),
-            r.getAs[Double]("composite_score"))).toSeq)
+      val (nSig, nUp, nDown) = significant.map { s =>
+        val r = s.agg(count(lit(1)), count(when(col("log2FC") > 0, 1)),
+          count(when(col("log2FC") < 0, 1))).head()
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      }.getOrElse((0L, 0L, 0L))
+      val nNodes = network.map(_._1.rows.size.toLong).getOrElse(0L)
+      val nEdges = network.map(_._2.rows.size.toLong).getOrElse(0L)
+      // the collected scores are in (composite_score desc, gene) order
+      val topTargets = scores.map(_.rows.take(10).map(r =>
+        (r.getString(0), r.getAs[Double]("composite_score"))))
         .getOrElse(Seq.empty)
       Sinks.summaryReport(geo.sampleIds.length.toLong, nCase, nControl,
         nProbes, nGenes, nSig, nUp, nDown, nNodes, nEdges, topTargets,

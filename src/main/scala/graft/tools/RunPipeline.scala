@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.{DrugTargetPipeline, PipelineConfig}
 
-/** CLI entry for the full nine-stage pipeline.
+/** CLI entry for the full nine-stage pipeline. Prints one stderr line
+  * per stage, `[pipeline] stage <name> <seconds>`, before `PIPELINE_DONE`.
   *
   * Usage: sbt "runMain graft.tools.RunPipeline <matrix.txt[.gz]>
   *   <mapping.csv> <outputDir> [ensemblSnapshot.csv] [openTargets.json]"
@@ -31,6 +32,9 @@ object RunPipeline {
     val result = new DrugTargetPipeline(spark, cfg).run()
     result.failures.foreach { case (stage, e) =>
       System.err.println(s"[pipeline] stage $stage failed: ${e.getMessage}")
+    }
+    result.stageSeconds.foreach { case (stage, secs) =>
+      System.err.println(f"[pipeline] stage $stage $secs%.3f")
     }
     println(s"PIPELINE_DONE failures=${result.failures.length} out=${args(2)}")
     spark.stop()

@@ -16,7 +16,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * `pinned(dfs){body}` persists the given frames for the duration of
   * `body` and unpersists them after. Frames the CALLER already
-  * persisted are left untouched (their lifecycle is the caller's).
+  * persisted are left untouched (their lifecycle is the caller's), and
+  * so are local relations: their rows are already in memory, and
+  * caching them would only copy those rows into the block store.
   * Correctness-neutral by construction: unpersist only drops cached
   * blocks — any consumer evaluated later recomputes from source.
   * Callers whose returned frame must outlive the pin materialize it
@@ -25,7 +27,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pin {
   def pinned[T](dfs: DataFrame*)(body: => T): T = {
-    val mine = dfs.filter(_.storageLevel == StorageLevel.NONE)
+    val mine = dfs.filter(df => df.storageLevel == StorageLevel.NONE && !df.isLocal)
     mine.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     try body
     finally mine.foreach(_.unpersist(false))

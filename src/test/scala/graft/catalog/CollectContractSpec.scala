@@ -25,14 +25,18 @@ class CollectContractSpec extends AnyFunSuite {
     * count, bounding contract). */
   private val allowed: Map[String, (Int, String)] = Map(
     "graft/graph/Centrality.scala" ->
-      (11, "betweenness behind the require-guarded driver-collectable " +
-        "contract (<= 2M nodes / 20M edges); the <= 100k-node small " +
+      (12, "betweenness behind the require-guarded driver-collectable " +
+        "contract (<= 2M nodes / 20M edges), including its per-partition " +
+        "Brandes partials (<= 256 arrays of n doubles, summed in " +
+        "partition order); the <= 100k-node small " +
         "branches of eigenvector/pageRank/pageRankWeighted/hits " +
         "(distributed DataFrame loops above); 1-row convergence-error " +
         "probes inside those distributed loops"),
     "graft/pipeline/DrugTargetPipeline.scala" ->
-      (8, "report stage over the top-N-bounded DE/network tables " +
-        "(<= networkTopN genes by construction) + 1-row scalar probes"),
+      (5, "collectLocal's one site, called on the top genes, their " +
+        "edges and the composite scores (<= nTopGenes rows, edges <= " +
+        "nTopGenes^2 / 2); the volcano table (gene grain); the figure " +
+        "tables (limit(30) nodes, their induced edges, limit(20) bars)"),
     "graft/graph/ShortestPaths.scala" ->
       (4, "small branches of the dual size dispatch (<= 100k / <= 2k " +
         "nodes) — DataFrame relaxation loops above the thresholds"),

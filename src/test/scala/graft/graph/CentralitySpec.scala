@@ -95,6 +95,29 @@ class CentralitySpec extends SparkSuite {
       s"${sampled.values.sum} vs ${exact.values.sum}")
   }
 
+  test("betweenness: repeated calls on a multi-partition graph are " +
+    "bitwise equal") {
+    // 256 sources -> 16 partitions of Brandes partials. Merged in task
+    // completion order, their sum changes in the last bit from call to
+    // call; merged in partition order, it never does.
+    val ns = (0 until 256).map(i => f"g$i%03d")
+    val rnd = new scala.util.Random(17)
+    val es = ns.indices.flatMap(i =>
+      Seq.fill(4)(ns(i) -> ns(rnd.nextInt(ns.length))))
+    val (nodes, edges) = graph(ns, es)
+    def bits() = Centrality.betweennessCentrality(spark, nodes, edges)
+      .collect().map(r =>
+        r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+      .toMap
+    val first = bits()
+    for (call <- 2 to 4) {
+      val again = bits()
+      val differing = first.keys.filter(g => again(g) != first(g))
+      assert(differing.isEmpty,
+        s"call $call: ${differing.size} genes differ from call 1")
+    }
+  }
+
   test("distributed eigenvector matches the driver loop (P4 + C5 + star)") {
     for ((ns, es) <- Seq(
         (Seq("a", "b", "c", "d"), Seq("a" -> "b", "b" -> "c", "c" -> "d")),

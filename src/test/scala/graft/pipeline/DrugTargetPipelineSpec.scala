@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
 import graft.SparkSuite
 
 class DrugTargetPipelineSpec extends SparkSuite {
@@ -23,7 +25,7 @@ class DrugTargetPipelineSpec extends SparkSuite {
     * a value, a column, ordering or float formatting fails here.
     * Goldens are (re)generated by [[GoldenGen]]. */
   private def assertGolden(outDir: String, prefix: String): Unit = {
-    for (d <- Seq("significant_genes", "network_targets", "final_targets"))
+    for (d <- GoldenGen.goldenSinks)
       assert(sinkCsv(outDir, d) == golden(s"$prefix$d.csv"),
         s"golden mismatch in $d")
     assert(
@@ -77,6 +79,13 @@ class DrugTargetPipelineSpec extends SparkSuite {
     assert(result.failures.isEmpty,
       s"stage failures: ${result.failures.map { case (n, e) => s"$n: $e" }}")
     assertGolden(out, prefix = "medium_")
+
+    // the scores leave the network stage as a local relation: no leaf of
+    // their plan (an RDD or a file scan) reaches back into the pipeline's
+    // lineage, which every later job would otherwise replan
+    val leaves = result.targetScores.get.queryExecution.analyzed.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]),
+      s"targetScores plan leaves: ${leaves.map(_.nodeName)}")
 
     // figures/ PNGs (G6 + pixel-grain S10): all three render on the
     // medium fixture (network has >= 2 nodes here) and decode back

@@ -13,6 +13,12 @@ import org.apache.spark.sql.SparkSession
   * Run: sbt "Test/runMain graft.pipeline.GoldenGen /tmp/golden" */
 object GoldenGen {
 
+  /** The single-file CSV sinks pinned byte for byte: the decision-grade
+    * tables plus the figure-data tables the PNGs are drawn from. */
+  val goldenSinks: Seq[String] = Seq("significant_genes", "network_targets",
+    "final_targets", "network_viz_nodes", "network_viz_edges",
+    "top_targets_barplot")
+
   /** Deterministic medium fixture: 20 genes × 2 probes × 12 samples
     * (6 case / 6 control), engineered so every pipeline stage has real
     * work at golden grain:
@@ -106,7 +112,7 @@ object GoldenGen {
                          dest: java.nio.file.Path, prefix: String): Unit = {
     val result = new DrugTargetPipeline(spark, cfg).run()
     require(result.failures.isEmpty, s"failures: ${result.failures}")
-    for (d <- Seq("significant_genes", "network_targets", "final_targets")) {
+    for (d <- goldenSinks) {
       val part = new java.io.File(s"${cfg.outputDir}/data/$d").listFiles()
         .filter(_.getName.endsWith(".csv"))
       require(part.length == 1, s"$d: expected 1 csv part")

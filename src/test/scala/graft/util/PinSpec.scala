@@ -1,14 +1,17 @@
 package graft.util
 
 import graft.SparkSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-/** Pin.primeShared — the utilization dispatch for multi-consumer
-  * persisted frames (prime when the cluster is saturated, race when
-  * idle; round-15 VERDICT item 6). Both dispatch branches are pinned
-  * here: default/false runs NO job and leaves the cache cold; true
-  * materializes every cached partition before returning. */
+/** Pin.pinned's choice of frames to cache, and Pin.primeShared — the
+  * utilization dispatch for multi-consumer persisted frames (prime when
+  * the cluster is saturated, race when idle; round-15 VERDICT item 6).
+  * Both dispatch branches are pinned here: default/false runs NO job and
+  * leaves the cache cold; true materializes every cached partition
+  * before returning. */
 class PinSpec extends SparkSuite {
   import spark.implicits._
 
@@ -23,6 +26,18 @@ class PinSpec extends SparkSuite {
   private def bomb() = spark.range(10)
     .select(expr("assert_true(id > 100)").as("b"))
     .persist(StorageLevel.MEMORY_AND_DISK)
+
+  test("pinned caches a computed frame for the body only, and never a " +
+    "local relation") {
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(Row(1), Row(2)), StructType.fromDDL("x INT"))
+    val computed = spark.range(0, 7919, 1, 3).toDF("pin_probe")
+    Pin.pinned(local, computed) {
+      assert(local.storageLevel == StorageLevel.NONE)
+      assert(computed.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    }
+    assert(computed.storageLevel == StorageLevel.NONE)
+  }
 
   test("default (race): primeShared is a no-op — no evaluation runs") {
     spark.conf.unset(Pin.PrimeSharedKey)
